@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import io
 import os
+import re
 import sys
 from contextlib import redirect_stdout
 
@@ -30,6 +31,32 @@ def formatted(df) -> str:
     with redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+def python_crossings(df) -> set[str]:
+    """Distinct ArrowEvalPython nodes of a plan. A cached subtree is
+    printed at every reference to it, with the same node text
+    (expression ids included), so the set counts each node once."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return {ln[ln.index("ArrowEvalPython"):] for ln in plan.splitlines()
+            if "ArrowEvalPython" in ln}
+
+
+def node_details(plan: str, node: str) -> list[str]:
+    """The node-details blocks ("(N) <node>" up to the next blank line)
+    of a formatted plan for one exact operator name."""
+    return [b for b in plan.split("\n\n")
+            if re.match(rf"\(\d+\) {node}\b", b.lstrip())]
+
+
+def row_local_ok(plan: str) -> bool:
+    """No Generate node, and every shuffle Exchange is the scan-spreading
+    round-robin repartition (queries._spread) — read from the Exchange
+    nodes' own Arguments, not from any node's."""
+    parts = [m.group(1) for b in node_details(plan, "Exchange")
+             for m in [re.search(r"^Arguments: (\w+)", b, re.M)] if m]
+    return (not node_details(plan, "Generate")
+            and all(p == "RoundRobinPartitioning" for p in parts))
 
 
 def main():
@@ -51,6 +78,7 @@ def main():
     out = build_kg(spark, pages, demo_config(), dims, persist=True)
     out["triples"].count()  # execute so AQE finalizes (codegen ids visible)
     triples_plan = formatted(out["triples"])
+    crossings = python_crossings(out["triples"])
     lineage_plan = formatted(out["lineage"])
 
     # the parse stage in isolation (pipeline step 1-2): the one subtree
@@ -102,9 +130,19 @@ def main():
     check("parse stage = ONE Arrow crossing over ONE pages scan",
           n_parse == 1 and n_scans == 2,
           f"{n_parse} ArrowEvalPython, {n_scans} scans (pages+sitelinks)")
+    # mapping and linking are JVM-native (functions/native.py): the
+    # flagship plan crosses into Python at the parse node and at the
+    # one validate node, and nowhere else
+    check("two Python crossings in the flagship plan: parse + one validate node",
+          len(crossings) == 2
+          and sum("extract_and_parse_udf" in n for n in crossings) == 1
+          and sum("coord_parse_udf" in n for n in crossings) == 1,
+          f"{len(crossings)} distinct ArrowEvalPython nodes")
     check("mapping fan-out reads the template cache (Union over InMemoryTableScan)",
           "ArrowEvalPython" not in triples_plan.split("InMemoryRelation")[0],
           "no Python crossing outside a cache in the flagship plan")
+    check("no driver-built Python RDD in the KG plans (config tables are local relations)",
+          not any("ExistingRDD" in p for p in (triples_plan, lineage_plan)))
     # r4: the page census rides the persisted parse (outer explode +
     # left sitelink join), so lineage must not open the pages table a
     # second time — every parquet scan in its plan sits BEHIND a cache
@@ -177,13 +215,6 @@ def main():
     # A hashpartitioning/rangepartitioning/SinglePartition exchange
     # would mean a real shuffle crept in (the measured 19 s
     # explode->groupBy first cut of repetition would fail this).
-    def row_local_ok(plan):
-        import re
-        ex_args = re.findall(r"Arguments: (\w+)", plan)
-        bad = [a for a in ex_args
-               if a in ("hashpartitioning", "rangepartitioning",
-                        "SinglePartition")]
-        return "Generate" not in plan and not bad
     pii_plan = formatted(QUERIES["pii_scrub"](spark, sf))
     rep_plan = formatted(QUERIES["quality_repetition"](spark, sf))
     check("pii_scrub is row-local: no Generate, no shuffle beyond scan-spread",

@@ -2,9 +2,23 @@
 
 Every UDF here wraps a pure function from functions/* and is
 Series->Series (Arrow batches, no per-row Python at the Spark
-boundary, per BASELINE.json input_hint). Coordinate arithmetic and URL
-normalization stay in Python for bit parity with the reference
-(Python round() banker's rounding, pywdcollections.py:1246,1252).
+boundary, per BASELINE.json input_hint). The KG path crosses into
+Python at exactly two plan nodes:
+
+ * parse: ``extract_and_parse_udf`` (html -> templates; the
+   tokenizer has no built-in-function form);
+ * validate: ``coord_parse_udf``, ``url_normalize_udf`` and
+   ``int_parse_ok_udf``, evaluated together in one node. Coordinate
+   arithmetic stays in Python for bit parity with the reference
+   (Python round() banker's rounding and float repr,
+   pywdcollections.py:1246,1252), URL normalization for its
+   str.strip()/split chain, the integer gate because it is literally
+   int() (underscores, unicode digits).
+
+Every other value rule on the path (wikilink mentions, named and
+positional coordinates, str.strip()) is a native expression in
+functions/native.py. ``extract_text_udf`` and ``parse_templates_udf``
+serve the text-parity check and the ``use_html=False`` parse.
 """
 
 from __future__ import annotations
@@ -14,11 +28,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pywdcollections_spark.functions.coerce import (
-    find_wikilink_mentions,
-    normalize_named_coordinate,
     normalize_url,
     parse_coordinate_value,
-    positional_coordinates,
 )
 from pywdcollections_spark.functions.text_extract import extract_text_series
 from pywdcollections_spark.functions.wikitemplates import parse_templates_series
@@ -59,29 +70,6 @@ parse_templates_udf = parse_templates_udf.asNondeterministic()
 extract_and_parse_udf = extract_and_parse_udf.asNondeterministic()
 
 
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def wikilink_mentions_udf(vals: pd.Series) -> pd.Series:
-    return vals.map(find_wikilink_mentions)
-
-
-@F.pandas_udf(T.StringType())
-def coord_named_normalize_udf(vals: pd.Series) -> pd.Series:
-    # None-safe: the caller NULL-gates non-625 rows inside the argument
-    return vals.map(lambda v: normalize_named_coordinate(v)
-                    if v is not None else None)
-
-
-@F.pandas_udf(T.StringType())
-def coord_positional_udf(params: pd.Series) -> pd.Series:
-    """Positional-625 value: literal '%s|%s|0' when the template carries
-    coordinates, '' otherwise — the reference's missing-interpolation
-    defect mirrored deliberately (pywdcollections.py:390)."""
-    def f(ps):
-        lat, lon = positional_coordinates(list(ps) if ps is not None else [])
-        return "%s|%s|0" if lat and lon else ""
-    return params.map(f)
-
-
 @F.pandas_udf(T.StructType([
     T.StructField("lat", T.DoubleType()),
     T.StructField("lon", T.DoubleType()),
@@ -120,7 +108,12 @@ def int_parse_ok_udf(vals: pd.Series) -> pd.Series:
     return vals.map(ok)
 
 
-def python_trim(col):
-    """Python str.strip() parity (all whitespace, not just spaces —
-    Spark's trim() strips ' ' only)."""
-    return F.regexp_replace(col, r"^\s+|\s+$", "")
+# The validate UDFs are deterministic too, and fenced the same way:
+# build_kg's ``valid`` filter is otherwise pushed through the projection
+# that computes these columns, and the UDF calls in its condition become
+# a second ArrowEvalPython node over the same rows (all three UDFs ran
+# twice per staged row on the single-commit path). A nondeterministic
+# projection stops that pushdown. The columns only feed projections.
+coord_parse_udf = coord_parse_udf.asNondeterministic()
+url_normalize_udf = url_normalize_udf.asNondeterministic()
+int_parse_ok_udf = int_parse_ok_udf.asNondeterministic()

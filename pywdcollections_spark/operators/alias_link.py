@@ -146,7 +146,7 @@ def link_with_alias_fallback(cands: DataFrame, sitelinks: DataFrame,
     is evaluated twice at materialization. The pipeline caller persists
     cands (plans/pipeline.py harvest); standalone callers with an
     expensive cands plan should do the same."""
-    from pywdcollections_spark.functions.udfs import wikilink_mentions_udf
+    from pywdcollections_spark.functions.native import wikilink_mentions
     from pywdcollections_spark.operators.linking import (_GRAIN,
                                                          link_entity_values)
 
@@ -160,7 +160,7 @@ def link_with_alias_fallback(cands: DataFrame, sitelinks: DataFrame,
     # extension and free to pick the best-scoring mention. The
     # namespace-skip/extraction rules stay those of the reference.
     residue_m = (residue
-                 .withColumn("_mentions", wikilink_mentions_udf("val"))
+                 .withColumn("_mentions", wikilink_mentions("val"))
                  .filter(F.size("_mentions") > 0)
                  .select(*residue.columns,
                          F.posexplode("_mentions").alias("_mpos", "mention"))

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pywdcollections_spark.functions.udfs import wikilink_mentions_udf
+from pywdcollections_spark.functions.native import wikilink_mentions
 
 _GRAIN = ["url", "warc_ts", "site", "qid", "template_idx", "param_idx",
           "prop_key", "pred", "datatype"]
@@ -63,7 +63,7 @@ def link_entity_values(cands: DataFrame, sitelinks: DataFrame, redirects: DataFr
 
     mentions = (ent
                 .select(*_GRAIN, "val",
-                        F.posexplode(wikilink_mentions_udf("val"))
+                        F.posexplode(wikilink_mentions("val"))
                          .alias("mention_idx", "mention")))
 
     # redirect-resolved lookup dim, built ONCE dim-side: direct titles

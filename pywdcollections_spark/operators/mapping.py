@@ -22,9 +22,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pywdcollections_spark.functions.udfs import (
-    coord_named_normalize_udf,
-    coord_positional_udf,
+from pywdcollections_spark.functions.native import (
+    named_coordinate,
+    positional_coordinate,
     python_trim,
 )
 
@@ -53,10 +53,8 @@ def map_named_params(templates: DataFrame, template_map: DataFrame) -> DataFrame
                       F.posexplode("params").alias("param_idx", "param"))
               .withColumn("kv", F.split("param", "="))
               .filter(F.size("kv") == 2)  # exactly-2 rule (:360)
-              # one withColumns: the trim UDFs still see only the
-              # 2-part rows (gated by the filter below them)
-              .withColumns({"pkey": F.lower(python_trim(F.col("kv")[0])),
-                            "val": python_trim(F.col("kv")[1])})
+              .withColumns({"pkey": F.lower(python_trim("kv[0]")),
+                            "val": python_trim("kv[1]")})
               .filter(F.length("val") > 2))
     matched = params.join(
         named_map,
@@ -71,7 +69,7 @@ def map_named_params(templates: DataFrame, template_map: DataFrame) -> DataFrame
 
     named_625 = (matched
                  .filter(F.col("prop_key") == "625")
-                 .withColumn("val", coord_named_normalize_udf("val"))
+                 .withColumn("val", named_coordinate("val"))
                  .select(*_KEY_COLS, "param_idx", "prop_key", "pred", "datatype", "val"))
 
     # 625a/625b pair within one template instance; the save re-fires at
@@ -114,10 +112,6 @@ def map_positional_params(templates: DataFrame, template_map: DataFrame) -> Data
     # the first qualifying index (equal strings have equal lengths, so an
     # earlier occurrence of the same value also qualifies).
     qualifying = F.filter(F.col("params"), lambda p: F.length(p) > 2)
-    # UDF input NULL-gated by pred (a when() outside the UDF does not
-    # stop its per-row evaluation — see validate.py note)
-    coord_val = coord_positional_udf(
-        F.when(F.col("pred") == "P625", F.col("params")))
     return (matched
             .withColumn("param", F.try_element_at(qualifying, F.lit(1)))
             .filter(F.col("param").isNotNull())
@@ -125,7 +119,8 @@ def map_positional_params(templates: DataFrame, template_map: DataFrame) -> Data
                     (F.array_position("params", F.col("param")) - 1)
                     .cast("int").alias("param_idx"),
                     "prop_key", "pred", "datatype",
-                    F.when(F.col("pred") == "P625", coord_val)
+                    F.when(F.col("pred") == "P625",
+                            positional_coordinate("params"))
                      .otherwise(F.col("param")).alias("val")))
 
 

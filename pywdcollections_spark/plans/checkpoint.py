@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from pywdcollections_spark.config import CollectionConfig
 from pywdcollections_spark.plans.pipeline import build_kg, unpersist_all
+from pywdcollections_spark.session import local_table
 
 
 def bucket_col(col, n_buckets: int):
@@ -171,7 +172,7 @@ def run_with_checkpoint(spark: SparkSession, pages: DataFrame,
         # (url, warc_ts) snapshots — the page identity all lineage
         # forms share (ADVICE r4) — counted from the persisted parse
         # pass, so the pages table is not re-scanned per group
-        todo_df = spark.createDataFrame([(b,) for b in todo], "bucket long")
+        todo_df = local_table(spark, [(b,) for b in todo], "bucket long")
         lin = (todo_df
                .join(out["lineage"].select("bucket", "n_pages", "n_triples"),
                      "bucket", "left")

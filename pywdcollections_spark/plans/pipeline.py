@@ -24,6 +24,7 @@ from pywdcollections_spark.operators import mapping as M
 from pywdcollections_spark.operators import parse as P
 from pywdcollections_spark.operators import validate as V
 from pywdcollections_spark.registry import PROP_SPECS
+from pywdcollections_spark.session import local_table
 
 
 class _LazyOut(dict):
@@ -49,7 +50,15 @@ class _LazyOut(dict):
 def prop_constraints_df(spark: SparkSession) -> DataFrame:
     rows = [{"pred": f"P{s.pid}", "constraints": [int(c) for c in s.constraints]}
             for s in PROP_SPECS.values()]
-    return spark.createDataFrame(rows, "pred string, constraints array<long>")
+    return local_table(spark, rows, "pred string, constraints array<long>")
+
+
+def template_map_df(spark: SparkSession, config: CollectionConfig) -> DataFrame:
+    """The config's template -> property map (``template_map_rows``)
+    as a broadcastable local table."""
+    return local_table(spark, config.template_map_rows(),
+                       "site string, template_lc string, param_lc string, "
+                       "prop_key string, pred string, datatype string")
 
 
 def harvest(spark: SparkSession, pages: DataFrame, config: CollectionConfig,
@@ -86,10 +95,7 @@ def harvest(spark: SparkSession, pages: DataFrame, config: CollectionConfig,
     the mapping stage filters the census rows back out, leaving staged
     output byte-identical.
     """
-    template_map = spark.createDataFrame(
-        config.template_map_rows(),
-        "site string, template_lc string, param_lc string, "
-        "prop_key string, pred string, datatype string")
+    template_map = template_map_df(spark, config)
 
     census = templates_out is not None
     templates = P.extract_and_parse(pages, n_partitions=n_partitions,

@@ -11,7 +11,7 @@ import os
 import tempfile
 import zipfile
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # At cluster scale these are overridden by spark-submit conf; the
 # values below are sized for local[8..32] on the synthetic tables.
@@ -77,6 +77,45 @@ def get_spark(
     spark = builder.getOrCreate()
     _ship_package(spark)
     return spark
+
+
+def local_table(spark: SparkSession, rows, schema: str) -> DataFrame:
+    """A small driver-side table as a JVM ``LocalRelation``: one inline
+    ``VALUES`` query, no Python RDD. ``rows`` are dicts keyed by column
+    name or sequences in column order; ``schema`` is a DDL string of
+    columns whose types hold no comma
+    (``"pred string, constraints array<long>"``).
+
+    Use it instead of ``createDataFrame(list)`` for config-sized tables:
+    that builds a pickled Python-RDD scan with no size statistics, so
+    every join against it plans as a shuffle, and each query runs a
+    Python-worker job to read it. A LocalRelation has exact statistics
+    (joins broadcast it) and is read in the JVM."""
+    cols = [c.strip().split(None, 1) for c in schema.split(",")]
+    names = [n for n, _ in cols]
+    values = [r if not isinstance(r, dict) else [r.get(n) for n in names]
+              for r in rows]
+    tuples = ", ".join("(" + ", ".join(_sql_literal(v) for v in r) + ")"
+                       for r in values)
+    if not tuples:  # VALUES needs a row: one all-NULL row, filtered out
+        tuples = "(" + ", ".join("NULL" for _ in cols) + ")"
+    select = ", ".join(f"CAST(c{i} AS {t}) AS `{n}`"
+                       for i, (n, t) in enumerate(cols))
+    aliases = ", ".join(f"c{i}" for i in range(len(cols)))
+    return spark.sql(f"SELECT {select} FROM VALUES {tuples} AS t({aliases})"
+                     + ("" if values else " WHERE false"))
+
+
+def _sql_literal(v) -> str:
+    if v is None:
+        return "NULL"
+    if isinstance(v, int):
+        return str(v)
+    if isinstance(v, str):
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    if isinstance(v, list):
+        return "array(" + ", ".join(_sql_literal(x) for x in v) + ")"
+    raise TypeError(f"local_table: unsupported value {v!r}")
 
 
 def _ship_package(spark: SparkSession) -> None:
